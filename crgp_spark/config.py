@@ -50,8 +50,3 @@ class EngineConfig:
     checkpoint_dir: str = field(
         default_factory=lambda: os.environ.get("SPARK_GRAFT_CKPT", "/tmp/crgp_ckpt")
     )
-
-    # Derivation ----------------------------------------------------------
-    #: cap on participants considered per conversation (the reference's
-    #: friend lists are bounded per user; dense per-conv graphs must be too)
-    max_participants_per_conv: int = 64

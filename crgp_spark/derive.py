@@ -97,9 +97,27 @@ def derive_edge_turns(
     SURVEY.md §7.1).
     """
     turns = prepare_turns(transcripts)
-    acts = first_activations(turns)
-    orig = originators(turns)
+    return influence_edges(
+        turns, first_activations(turns), originators(turns), friendships
+    )
 
+
+def influence_edges(
+    turns: DataFrame,
+    acts: DataFrame,
+    orig: DataFrame,
+    friendships: DataFrame | None = None,
+) -> DataFrame:
+    """The influence rule itself — the one place it is written down. Emits
+    the edges into every turn of ``turns`` (the output schema of
+    ``derive_edge_turns``) against the activation state ``acts``
+    (``first_activations``) and the originators ``orig`` (``originators``).
+
+    The batch path passes state computed from ``turns`` itself; the
+    incremental path (``streaming/incremental.py``) passes one epoch's
+    turns and the activation state merged up to that epoch — the
+    reference's single stateful operator applied per epoch
+    (``reconstruct.rs:59-115``, ``run.rs:118-129``)."""
     # Influenced turns: every turn except the conversation opener
     # (= the reference's retweets; the original tweet emits no edge).
     targets = turns.join(orig, "conv_id").filter(

@@ -14,7 +14,7 @@ exactly the live window:
 so state size is bounded by events-per-key-per-window (the operator's
 own documented envelope), regardless of stream length — unlike the
 multiset path (``sequences.py``, state = full history) and unlike the
-carry paths (``cusum.py``/``stateful.py``, O(1) state but prefix-only
+carry path (``cusum.py``, O(1) state but prefix-only
 semantics).  Each micro-batch is one vectorized pass: merge buffer +
 new rows (both already time-ordered), two prefix-sum arrays, two
 ``searchsorted`` bounds per new row — never a per-row Python loop.

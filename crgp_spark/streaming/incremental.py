@@ -7,7 +7,8 @@ Each micro-batch of transcript turns is one epoch: the keyed activation
 state (first turn per (conversation, participant) — the reference's
 per-worker ``HashMap or_insert`` state, ``reconstruct.rs:41-44``) is
 merged forward, and influence edges are emitted ONLY for the turns of
-the current batch, against the merged state. Because the influence rule
+the current batch, against the merged state, by the batch path's own
+``derive.influence_edges``. Because the influence rule
 compares activation timestamps (strictly earlier, ``reconstruct.rs:83``),
 the incremental output equals the batch derivation whenever batches
 arrive in stable turn order per conversation — the same input contract
@@ -16,23 +17,33 @@ out-of-order delivery silently yields fewer/different edges there too.
 
 State commits are atomic per epoch: a new versioned state directory is
 written, then a one-line manifest is atomically renamed over the old
-one — a killed run resumes from the last committed epoch (the streaming
-analog of the superstep checkpoints in plans/checkpoint.py).
+one, and the superseded state directory is deleted — a killed run
+resumes from the last committed epoch (the streaming analog of the
+superstep checkpoints in plans/checkpoint.py).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from crgp_spark.derive import first_activations, originators, prepare_turns
+from crgp_spark.derive import (
+    first_activations,
+    influence_edges,
+    originators,
+    prepare_turns,
+)
 
 _ACT_SCHEMA = "conv_id string, participant string, act_turn int, act_ts long"
-_ORIG_SCHEMA = "conv_id string, orig_turn int, orig_participant string"
+_EDGE_SCHEMA = (
+    "conv_id string, src_turn int, src_participant string, dst_turn int,"
+    " dst_participant string, ts long, orig_turn int, epoch int"
+)
 
 
 class IncrementalDeriver:
@@ -40,10 +51,9 @@ class IncrementalDeriver:
 
     Directory layout under ``state_dir``::
 
-        MANIFEST.json            {"epoch": N, "acts": "...", "origs": "..."}
+        MANIFEST.json            {"epoch": N, "acts": "..."}
         state/acts_<N>/          activation state after epoch N
-        state/origs_<N>/         originator state after epoch N
-        edges/                   appended edge output (one dir, partitioned)
+        edges/epoch=<N>/         edge output of epoch N
     """
 
     def __init__(
@@ -51,23 +61,12 @@ class IncrementalDeriver:
         spark: SparkSession,
         state_dir: str,
         friendships: DataFrame | None = None,
-        batch_size: int | None = None,
     ):
         """``friendships``: optional ``(user, friend)`` candidate
-        restriction, same contract as ``derive.derive_edge_turns``.
-
-        ``batch_size``: maximum turns merged per state step. The file
-        source caps epochs by file count or bytes; this caps by ROWS —
-        the reference's exact ``batch_size = 50_000`` retweets-per-epoch
-        semantics (``configuration/main.rs:44``, ``run.rs:118-129``).
-        An oversized micro-batch is re-batched into ``<= batch_size``
-        -turn sub-epochs in stream order before the state merge; the
-        manifest commit (and hence replay idempotency) stays one per
-        source micro-batch."""
+        restriction, same contract as ``derive.derive_edge_turns``."""
         self.spark = spark
         self.state_dir = state_dir
         self.friendships = friendships
-        self.batch_size = batch_size
         os.makedirs(os.path.join(state_dir, "state"), exist_ok=True)
 
     # -- manifest helpers --------------------------------------------------
@@ -88,6 +87,13 @@ class IncrementalDeriver:
         with os.fdopen(fd, "w") as f:
             json.dump(manifest, f)
         os.replace(tmp, self._manifest_path)
+        # only now is every other state directory superseded (including
+        # the origs_<N> tables of the older two-table layout)
+        state = os.path.join(self.state_dir, "state")
+        keep = os.path.basename(manifest["acts"])
+        for name in os.listdir(state):
+            if name != keep:
+                shutil.rmtree(os.path.join(state, name), ignore_errors=True)
 
     def _check_edges_layout(self) -> None:
         """The edge store is ``epoch=N`` partition directories (since
@@ -115,168 +121,63 @@ class IncrementalDeriver:
                 "the old edges/ aside."
             )
 
-    def _load_state(self) -> tuple[DataFrame, DataFrame, int]:
+    def _load_state(self) -> tuple[DataFrame, int]:
         m = self._read_manifest()
         if m is None:
-            empty_a = self.spark.createDataFrame([], _ACT_SCHEMA)
-            empty_o = self.spark.createDataFrame([], _ORIG_SCHEMA)
-            return empty_a, empty_o, -1
-        return (
-            self.spark.read.parquet(m["acts"]),
-            self.spark.read.parquet(m["origs"]),
-            int(m["epoch"]),
-        )
-
-    # -- the epoch step ----------------------------------------------------
-    def _epoch_step(
-        self, turns: DataFrame, acts_old: DataFrame, origs_old: DataFrame
-    ) -> tuple[DataFrame, DataFrame, DataFrame]:
-        """Pure-DataFrame state transition for one (sub-)epoch: returns
-        (acts_new, origs_new, edges) — the merged state and the edges of
-        THIS step's turns against it (``reconstruct.rs:69-115`` for one
-        epoch's retweets)."""
-        # Merge activation state forward: first-wins == global min of the
-        # (turn, ts) key over old state + this batch (or_insert analog).
-        # min/min_by (hash-aggregable) rather than min(struct(...)):
-        # turn indices are unique per key, so the pair (min turn, its
-        # payload) equals the lexicographic struct min.
-        acts_new = (
-            first_activations(turns)
-            .unionByName(acts_old)
-            .groupBy("conv_id", "participant")
-            .agg(
-                F.min("act_turn").alias("act_turn"),
-                F.min_by("act_ts", "act_turn").alias("act_ts"),
-            )
-        )
-        origs_new = (
-            originators(turns)
-            .unionByName(origs_old)
-            .groupBy("conv_id")
-            .agg(
-                F.min("orig_turn").alias("orig_turn"),
-                F.min_by("orig_participant", "orig_turn").alias(
-                    "orig_participant"
-                ),
-            )
-        )
-        # materialize the merged state once: the edge plan below reuses
-        # it instead of recomputing the aggregation, and chained
-        # sub-epochs get truncated lineage (the iterative-plan rule)
-        acts_new = acts_new.localCheckpoint(eager=True)
-        origs_new = origs_new.localCheckpoint(eager=True)
-        targets = turns.join(origs_new, "conv_id").filter(
-            F.col("turn_idx") != F.col("orig_turn")
-        )
-        cand = targets.join(
-            acts_new.select(
-                "conv_id",
-                F.col("participant").alias("influencer"),
-                "act_turn",
-                "act_ts",
-            ),
-            "conv_id",
-        ).filter(F.col("influencer") != F.col("participant"))
-        if self.friendships is not None:
-            cand = cand.join(
-                F.broadcast(
-                    self.friendships.select("user", "friend").distinct()
-                ),
-                (cand["participant"] == F.col("user"))
-                & (cand["influencer"] == F.col("friend")),
-                "left_semi",
-            )
-        edges = cand.filter(
-            (F.col("act_ts") < F.col("ts"))
-            | (F.col("influencer") == F.col("orig_participant"))
-        ).select(
-            "conv_id",
-            F.col("act_turn").alias("src_turn"),
-            F.col("influencer").alias("src_participant"),
-            F.col("turn_idx").alias("dst_turn"),
-            F.col("participant").alias("dst_participant"),
-            "ts",
-            "orig_turn",
-        )
-        return acts_new, origs_new, edges
+            return self.spark.createDataFrame([], _ACT_SCHEMA), -1
+        return self.spark.read.parquet(m["acts"]), int(m["epoch"])
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         """One epoch: merge state, emit this batch's edges, commit."""
         self._check_edges_layout()
-        acts_old, origs_old, last_epoch = self._load_state()
+        acts_old, last_epoch = self._load_state()
         if batch_id <= last_epoch:
             return  # replayed epoch after restart: already committed
 
-        turns_all = prepare_turns(batch_df)
-
-        if self.batch_size is not None:
-            # row-capped re-batching: sub-epochs of <= batch_size turns
-            # in stream order. Any global order consistent with
-            # per-conversation turn order yields the batch-identical
-            # output (a later turn's activation can never influence an
-            # earlier one: strict act_ts < ts, and the originator is the
-            # per-conversation minimum turn), so the global sort here is
-            # a determinism convenience, bounded by the source's
-            # per-epoch file/byte cap — not a scale concern.
-            from pyspark.sql import Window
-
-            w = Window.orderBy("ts", "conv_id", "turn_idx")
-            numbered = (
-                turns_all.withColumn(
-                    "_sub",
-                    F.floor((F.row_number().over(w) - 1) / self.batch_size),
+        turns = prepare_turns(batch_df)
+        # Merge activation state forward (or_insert analog): an old
+        # activation is a turn like any other, so the first activation
+        # over old state + this batch is the merged state. Materialized
+        # once: the state write and the edge plan both reuse it.
+        acts = first_activations(
+            turns.unionByName(
+                acts_old.select(
+                    "conv_id",
+                    "participant",
+                    F.col("act_turn").alias("turn_idx"),
+                    F.col("act_ts").alias("ts"),
                 )
-                .localCheckpoint(eager=True)
             )
-            n_subs = int(
-                numbered.agg(F.max("_sub")).first()[0] or 0
-            ) + 1
-            subs = [
-                numbered.filter(F.col("_sub") == i).drop("_sub")
-                for i in range(n_subs)
-            ]
-        else:
-            subs = [turns_all]
-
-        acts_cur, origs_cur = acts_old, origs_old
-        edge_parts: list[DataFrame] = []
-        for turns in subs:
-            acts_cur, origs_cur, e = self._epoch_step(
-                turns, acts_cur, origs_cur
+        ).localCheckpoint(eager=True)
+        # the originator's first activation is its conversation's first turn
+        orig = originators(
+            acts.select(
+                "conv_id", "participant", F.col("act_turn").alias("turn_idx")
             )
-            if len(subs) > 1:
-                e = e.localCheckpoint(eager=True)
-            edge_parts.append(e)
+        )
 
         epoch = int(batch_id)
         acts_path = os.path.join(self.state_dir, "state", f"acts_{epoch}")
-        origs_path = os.path.join(self.state_dir, "state", f"origs_{epoch}")
-        acts_cur.write.mode("overwrite").parquet(acts_path)
-        origs_cur.write.mode("overwrite").parquet(origs_path)
-
-        edges = edge_parts[0]
-        for e in edge_parts[1:]:
-            edges = edges.unionByName(e)
+        acts.write.mode("overwrite").parquet(acts_path)
         # One directory per epoch, written with overwrite: a replay of an
         # epoch that crashed between the edge write and the manifest
         # commit rewrites the same directory instead of appending a
         # duplicate (the manifest rename stays the only commit point).
-        edges.write.mode("overwrite").parquet(
-            os.path.join(self.state_dir, "edges", f"epoch={epoch}")
-        )
+        influence_edges(turns, acts, orig, self.friendships).write.mode(
+            "overwrite"
+        ).parquet(os.path.join(self.state_dir, "edges", f"epoch={epoch}"))
 
-        self._commit_manifest(
-            {"epoch": epoch, "acts": acts_path, "origs": origs_path}
-        )
+        self._commit_manifest({"epoch": epoch, "acts": acts_path})
 
     def edges(self) -> DataFrame:
         """Edge output of all COMMITTED epochs (an orphaned directory
         from a crash mid-epoch is excluded until its epoch commits)."""
         self._check_edges_layout()
         m = self._read_manifest()
-        committed = -1 if m is None else int(m["epoch"])
+        if m is None:
+            return self.spark.createDataFrame([], _EDGE_SCHEMA)
         df = self.spark.read.parquet(os.path.join(self.state_dir, "edges"))
-        return df.filter(F.col("epoch") <= committed).withColumn(
+        return df.filter(F.col("epoch") <= int(m["epoch"])).withColumn(
             "epoch", F.col("epoch").cast("int")
         )
 
@@ -289,7 +190,6 @@ def stream_derive(
     friendships: DataFrame | None = None,
     max_files_per_trigger: int | None = 1,
     max_bytes_per_trigger: int | None = None,
-    batch_size: int | None = None,
 ) -> None:
     """Run the incremental derivation over a parquet directory stream
     with an ``availableNow`` trigger (process everything pending, then
@@ -301,15 +201,10 @@ def stream_derive(
     (``max_files_per_trigger``) or by input volume
     (``max_bytes_per_trigger``, a positive byte count — the row-count analog
     for columnar input, where mid-file row slicing isn't possible
-    without breaking exactly-once file tracking). ``batch_size``
-    additionally caps each state step at that many ROWS by re-batching
-    oversized micro-batches into sub-epochs — the reference's literal
-    ``batch_size`` knob (``configuration/main.rs:44``)."""
+    without breaking exactly-once file tracking)."""
     from crgp_spark.schemas import TRANSCRIPTS
 
-    deriver = IncrementalDeriver(
-        spark, state_dir, friendships=friendships, batch_size=batch_size
-    )
+    deriver = IncrementalDeriver(spark, state_dir, friendships=friendships)
     reader = spark.readStream.schema(TRANSCRIPTS)
     if max_bytes_per_trigger is not None:
         reader = reader.option("maxBytesPerTrigger", max_bytes_per_trigger)

@@ -43,6 +43,26 @@ def test_no_per_row_python_in_engine():
     assert not offenders, "\n".join(offenders)
 
 
+def test_influence_rule_written_once():
+    """The influence predicate lives in ``derive.py`` alone: every other
+    derivation path (the incremental epochs among them) must call
+    ``derive.influence_edges`` instead of re-typing the rule."""
+    rule = re.compile(r'F\.col\("act_ts"\)\s*<\s*F\.col\("ts"\)')
+    offenders = []
+    for root, _dirs, files in os.walk(ENGINE_ROOT):
+        for fn in files:
+            path = os.path.join(root, fn)
+            if not fn.endswith(".py") or path == os.path.join(
+                ENGINE_ROOT, "derive.py"
+            ):
+                continue
+            with open(path) as f:
+                for i, line in enumerate(f, 1):
+                    if rule.search(line):
+                        offenders.append(f"{path}:{i}: {line.strip()}")
+    assert not offenders, "\n".join(offenders)
+
+
 def test_filter_pushdown_and_column_pruning(spark, tmp_path):
     """A conv_id filter over the parquet transcripts must reach the scan
     (PushedFilters) and unused wide columns (text) must be pruned from

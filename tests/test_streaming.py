@@ -39,17 +39,90 @@ def test_incremental_matches_batch_on_golden(spark, tmp_path):
     }
 
 
-def test_incremental_matches_batch_on_synthetic(spark, tmp_path):
-    t = synthetic_transcripts(spark, n_convs=30, seed=7, max_turns=32).persist()
-    cut1, cut2 = 4, 10
-    d = IncrementalDeriver(spark, str(tmp_path / "state"))
+def _three_epochs(d, t, cut1=4, cut2=10):
     d.process_batch(t.filter(F.col("turn_idx") < cut1), 0)
     d.process_batch(
         t.filter((F.col("turn_idx") >= cut1) & (F.col("turn_idx") < cut2)), 1
     )
     d.process_batch(t.filter(F.col("turn_idx") >= cut2), 2)
+
+
+def test_incremental_matches_batch_on_synthetic(spark, tmp_path):
+    """Three epochs == batch, unrestricted and under a friendships
+    restriction (a hash-sampled half of the batch's (user, friend)
+    pairs)."""
+    t = synthetic_transcripts(spark, n_convs=30, seed=7, max_turns=32).persist()
+    d = IncrementalDeriver(spark, str(tmp_path / "state"))
+    _three_epochs(d, t)
+    want = derive_edge_turns(t)
+    assert _edge_set(d.edges()) == _edge_set(want)
+
+    friendships = (
+        want.select(
+            F.col("dst_participant").alias("user"),
+            F.col("src_participant").alias("friend"),
+        )
+        .distinct()
+        .filter(F.xxhash64("user", "friend") % 2 == 0)
+    )
+    d = IncrementalDeriver(
+        spark, str(tmp_path / "state_f"), friendships=friendships
+    )
+    _three_epochs(d, t)
+    want_f = _edge_set(derive_edge_turns(t, friendships))
+    assert _edge_set(d.edges()) == want_f
+    assert 0 < len(want_f) < len(_edge_set(want))
+    t.unpersist()
+
+
+def test_superseded_state_is_deleted(spark, tmp_path):
+    """Each commit deletes the state it supersedes: after three epochs
+    only the last activation table remains, and the edges still equal
+    the batch derivation."""
+    t = synthetic_transcripts(spark, n_convs=20, seed=3, max_turns=24).persist()
+    state = tmp_path / "state"
+    d = IncrementalDeriver(spark, str(state))
+    _three_epochs(d, t)
+    assert os.listdir(state / "state") == ["acts_2"]
     assert _edge_set(d.edges()) == _edge_set(derive_edge_turns(t))
     t.unpersist()
+
+
+def test_resume_from_two_table_manifest(spark, tmp_path):
+    """A state_dir committed by the older layout (a manifest that also
+    names an originator table) resumes: the extra key is ignored, the
+    stale table is deleted at the next commit, and the result equals
+    the batch derivation."""
+    import json
+
+    from crgp_spark.derive import originators, prepare_turns
+
+    t = synthetic_transcripts(spark, n_convs=20, seed=9, max_turns=24).persist()
+    state = tmp_path / "state"
+    d = IncrementalDeriver(spark, str(state))
+    first = t.filter(F.col("turn_idx") < 4)
+    d.process_batch(first, 0)
+    origs = str(state / "state" / "origs_0")
+    originators(prepare_turns(first)).write.parquet(origs)
+    manifest = json.loads((state / "MANIFEST.json").read_text())
+    manifest["origs"] = origs
+    (state / "MANIFEST.json").write_text(json.dumps(manifest))
+
+    d = IncrementalDeriver(spark, str(state))
+    d.process_batch(t.filter(F.col("turn_idx") >= 4), 1)
+    assert os.listdir(state / "state") == ["acts_1"]
+    assert _edge_set(d.edges()) == _edge_set(derive_edge_turns(t))
+    t.unpersist()
+
+
+def test_edges_before_first_commit_is_empty(spark, tmp_path):
+    d = IncrementalDeriver(spark, str(tmp_path / "state"))
+    e = d.edges()
+    assert e.count() == 0
+    assert e.columns == derive_edge_turns(
+        golden_transcripts(spark)
+    ).columns + ["epoch"]
+    assert e.schema["epoch"].dataType.simpleString() == "int"
 
 
 def test_epoch_replay_is_idempotent(spark, tmp_path):
@@ -131,91 +204,6 @@ def test_stream_derive_available_now(spark, tmp_path, knobs):
         (c, s, dt, ts // 1_000_000) for (c, s, dt, ts) in _edge_set(d.edges())
     }
     assert got == {(c, s, dt, ts) for (c, s, dt, ts) in GOLDEN_EDGE_TURNS}
-
-
-@pytest.mark.parametrize("batch_size", [1, 7, 50_000])
-def test_row_capped_sub_epochs(spark, tmp_path, batch_size):
-    """The reference's literal batch_size knob (configuration/main.rs:44):
-    an oversized epoch is re-batched into <=N-turn sub-epochs before the
-    state merge; the committed result equals the batch derivation at
-    every N (1 = one turn per state step, 7 = mid-epoch split, 50k =
-    no split)."""
-    t = golden_transcripts(spark)
-    d = IncrementalDeriver(
-        spark,
-        str(tmp_path / "state"),
-        friendships=golden_friendships(spark),
-        batch_size=batch_size,
-    )
-    d.process_batch(t, 0)
-    got = {
-        (c, s, dt, ts // 1_000_000) for (c, s, dt, ts) in _edge_set(d.edges())
-    }
-    assert got == {(c, s, dt, ts) for (c, s, dt, ts) in GOLDEN_EDGE_TURNS}
-
-
-def test_row_capped_sub_epochs_synthetic(spark, tmp_path):
-    """Row-capped re-batching across multiple source epochs on a bigger
-    synthetic input still equals the batch derivation."""
-    t = synthetic_transcripts(spark, n_convs=20, seed=5, max_turns=24).persist()
-    d = IncrementalDeriver(spark, str(tmp_path / "state"), batch_size=50)
-    d.process_batch(t.filter(F.col("turn_idx") < 6), 0)
-    d.process_batch(t.filter(F.col("turn_idx") >= 6), 1)
-    assert _edge_set(d.edges()) == _edge_set(derive_edge_turns(t))
-    t.unpersist()
-
-
-def test_stateful_friendships_restriction(spark, tmp_path):
-    """The state-store path accepts the same friendships restriction as
-    the batch/incremental paths (ADVICE r2) and reproduces the golden
-    7-edge fixture, which depends on that restriction."""
-    from crgp_spark.streaming.stateful import stream_derive_stateful
-
-    t = golden_transcripts(spark)
-    inp = str(tmp_path / "in")
-    t.coalesce(1).write.parquet(inp)
-    out = str(tmp_path / "edges")
-    stream_derive_stateful(
-        spark,
-        inp,
-        out,
-        max_files_per_trigger=None,
-        friendships=golden_friendships(spark),
-    )
-    got = {
-        (c, s, dt, ts // 1_000_000)
-        for (c, s, dt, ts) in _edge_set(spark.read.parquet(out))
-    }
-    assert got == {(c, s, dt, ts) for (c, s, dt, ts) in GOLDEN_EDGE_TURNS}
-
-
-@pytest.mark.parametrize("split", ["two_epochs", "one_epoch"])
-def test_stateful_streaming_matches_batch(spark, tmp_path, split):
-    """applyInPandasWithState derivation (keyed state store) == batch
-    derivation, over a real Structured Streaming run with the
-    exactly-once parquet sink."""
-    from crgp_spark.streaming.stateful import stream_derive_stateful
-
-    t = synthetic_transcripts(spark, n_convs=25, seed=11, max_turns=24).persist()
-    inp = str(tmp_path / "in")
-    os.makedirs(inp, exist_ok=True)
-    import time as _time
-
-    if split == "two_epochs":
-        t.filter(F.col("turn_idx") < 5).coalesce(1).write.mode("append").parquet(inp)
-        _time.sleep(1.1)
-        t.filter(F.col("turn_idx") >= 5).coalesce(1).write.mode("append").parquet(inp)
-        knobs = {}
-    else:
-        t.coalesce(1).write.mode("append").parquet(inp)
-        knobs = {"max_files_per_trigger": None}
-
-    out = str(tmp_path / "edges")
-    stream_derive_stateful(spark, inp, out, **knobs)
-    got = _edge_set(spark.read.parquet(out))
-    want = _edge_set(derive_edge_turns(t))
-    assert got == want and got
-    t.unpersist()
 
 
 @pytest.mark.parametrize("files_per_trigger", [1, None])

@@ -61,7 +61,6 @@ GLOBAL_WINDOW_FILES = {
     "operators/survival.py": "distinct event times",
     "operators/cohort.py": "day grid",
     # input prep / oracle twins, not the data path
-    "streaming/incremental.py": "epoch replay prep (test input)",
     "streaming/scd.py": "epoch replay prep (test input)",
     "streaming/late.py": "epoch prep + #batches watermark table",
 }
