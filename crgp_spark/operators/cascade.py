@@ -53,6 +53,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from crgp_spark.config import EngineConfig
+from crgp_spark.operators.pack import load_block, pack_layout, reuse_or_pack
 from crgp_spark.plans.superstep import LoopResult, StepOutcome, run_loop
 
 #: per-vertex rows out of the kernel; one side row per partition
@@ -204,12 +205,10 @@ def pack_cascade(edges: DataFrame, cfg: EngineConfig, path: str) -> dict:
     n_replicas = spark.read.parquet(placement_path(path)).count()
     import uuid
 
-    from crgp_spark.operators.pack import PACK_FORMAT_VERSION
-
     stats = {
         # cache-invalidation fingerprint, see pack.py::load_block
         "pack_id": uuid.uuid4().hex,
-        "format_version": PACK_FORMAT_VERSION,
+        **pack_layout(cfg),
         "n_parts": int(r["n_parts"]),
         "n_edges": int(r["n_edges"]),
         "max_edges": int(r["max_edges"]),
@@ -217,36 +216,16 @@ def pack_cascade(edges: DataFrame, cfg: EngineConfig, path: str) -> dict:
         "skew_ratio": float(r["max_edges"]) / max(float(r["mean_edges"]), 1.0),
         "n_verts": int(r["n_verts"]),
         "n_replicas": n_replicas,
-        "graph_partitions": P,
     }
     with open(os.path.join(path, "_pack_stats.json"), "w") as f:
         json.dump(stats, f)
     return stats
 
 
-def _load_cascade_block(path: str, part: int, pack_id: str | None = None):
-    from crgp_spark.operators.pack import _BLOCK_CACHE, _cache_put
-
-    key = (path, part, "cascade", pack_id)
-    blk = _BLOCK_CACHE.get(key)
-    if blk is None:
-        import pyarrow.dataset as ds
-
-        tbl = ds.dataset(
-            os.path.join(path, f"part={part}"), format="parquet"
-        ).to_table()
-        blk = {
-            name: tbl[name][0].values.to_numpy(zero_copy_only=False)
-            for name in ("vids", "vdeg", "src_ids", "src_deg", "indptr", "dst")
-        }
-        _cache_put(key, blk)
-    return blk
-
-
 def _make_kernel(pack_path: str, pack_id: str | None = None):
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         part = int(pdf["part"].iloc[0])
-        blk = _load_cascade_block(pack_path, part, pack_id)
+        blk = load_block(pack_path, part, pack_id)
         vids, vdeg = blk["vids"], blk["vdeg"]
         src_ids, indptr, dst = blk["src_ids"], blk["indptr"], blk["dst"]
 
@@ -306,23 +285,9 @@ def pagerank_cascade(
     ``pagerank_df``; state ``(vid, rank)``."""
     cfg = cfg or EngineConfig()
     pack_path = os.path.join(cfg.checkpoint_dir, algo_name, "graph")
-    stats_file = os.path.join(pack_path, "_pack_stats.json")
-    pstats = None
-    if (resume or reuse_pack) and os.path.exists(stats_file):
-        with open(stats_file) as f:
-            pstats = json.load(f)
-        from crgp_spark.operators.pack import PACK_FORMAT_VERSION
-
-        # A pack written by an older layout (absent version = v1, nested
-        # _placement dir) must not be reused — the sibling placement path
-        # was never written and replicas would be silently lost.
-        if pstats.get("format_version") != PACK_FORMAT_VERSION:
-            pstats = None
-    if pstats is None:
-        pstats = pack_cascade(edges, cfg, pack_path)
+    pstats = reuse_or_pack(pack_cascade, edges, cfg, pack_path, resume or reuse_pack)
 
     n = pstats["n_verts"]
-    mean_edges = max(pstats["mean_edges"], 1.0)
     blocks_meta = {
         int(r["part"]): int(r["n_edges"])
         for r in spark.read.parquet(pack_path).select("part", "n_edges").collect()
@@ -346,7 +311,18 @@ def pagerank_cascade(
             .localCheckpoint(eager=True)
         )
 
+    # a resumed state's `part` is its own run's layout, which may not be
+    # this pack's (reuse_or_pack rebuilds on a layout change): the first
+    # step re-homes it by vid
+    rehome = resume
+
     def step(state: DataFrame, it: int) -> StepOutcome:
+        nonlocal rehome
+        if rehome:
+            state = verts_home.join(state.select("vid", "rank"), "vid").repartition(
+                cfg.graph_partitions, "part"
+            )
+            rehome = False
         msgs_in = state
         if has_replicas:
             # no explicit broadcast hint: placement is tiny by design
@@ -388,23 +364,8 @@ def pagerank_cascade(
         max_delta = float(agg["max_delta"] or 0.0)
         frontier = int(agg["frontier"] or 0)
 
-        lineage = spark.createDataFrame(
-            [
-                (
-                    algo_name,
-                    it,
-                    int(r["part"]),
-                    blocks_meta.get(int(r["part"]), 0),
-                    blocks_meta.get(int(r["part"]), 0),
-                    frontier,
-                    blocks_meta.get(int(r["part"]), 0) / mean_edges,
-                )
-                for r in side
-            ],
-            schema="algo string, iteration int, partition_id int, "
-            "edges_scanned long, messages_sent long, frontier_size long, "
-            "skew_ratio double",
-        )
+        scanned = {r["part"]: blocks_meta.get(r["part"], 0) for r in side}
+        lineage = [(p, e, e, frontier) for p, e in scanned.items()]
         metrics = {
             "max_delta": max_delta,
             "frontier": frontier,

@@ -44,7 +44,6 @@ inputs).
 
 from __future__ import annotations
 
-import json
 import os
 
 import numpy as np
@@ -54,6 +53,7 @@ from pyspark.sql import functions as F
 
 from crgp_spark.config import EngineConfig
 from crgp_spark.operators.cascade import pack_cascade, placement_path
+from crgp_spark.operators.pack import reuse_or_pack, unpack_csr
 
 #: boundary-reconciliation driver collect cap (vertices). A pathological
 #: all-split input would make the boundary set O(V); above this we fall
@@ -67,47 +67,6 @@ MAX_BOUNDARY_COLLECT = 2_000_000
 #: Conversations beyond this use the generic distributed path — the
 #: only case where per-superstep fixed cost is worth paying.
 RESIDUE_KERNEL_MAX_EDGES = 20_000_000
-
-
-def _ensure_pack(
-    edges: DataFrame, cfg: EngineConfig, path: str, reuse_pack: bool = False
-) -> dict:
-    """Pack ``edges`` at ``path``. REPACKS by default (matching
-    pagerank_cascade): a stale pack from a previous call with a
-    different edge table must never be silently reused (ADVICE r1).
-    ``reuse_pack=True`` opts into reuse for callers that packed ahead
-    of time (bench harnesses timing the phases separately)."""
-    stats_file = os.path.join(path, "_pack_stats.json")
-    if reuse_pack and os.path.exists(stats_file):
-        with open(stats_file) as f:
-            stats = json.load(f)
-        from crgp_spark.operators.pack import PACK_FORMAT_VERSION
-
-        # refuse to reuse an old-layout pack (see cascade.pagerank_cascade)
-        if stats.get("format_version") == PACK_FORMAT_VERSION:
-            return stats
-    return pack_cascade(edges, cfg, path)
-
-
-def _block_edges(spark: SparkSession, path: str) -> DataFrame:
-    """(part, src, dst) resident edge rows, exploded from the blocks."""
-    blocks = spark.read.parquet(path)
-    return blocks.select(
-        "part",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.size("src_ids") - 1),
-                lambda i: F.struct(
-                    F.col("src_ids")[i].alias("s"),
-                    F.slice(
-                        F.col("dst"),
-                        F.col("indptr")[i].cast("int") + 1,
-                        (F.col("indptr")[i + 1] - F.col("indptr")[i]).cast("int"),
-                    ).alias("adj"),
-                ),
-            )
-        ).alias("z"),
-    ).select("part", F.col("z.s").alias("src"), F.explode("z.adj").alias("dst"))
 
 
 def _split_residue(
@@ -400,10 +359,10 @@ def cascade_components(
     one kernel pass + boundary reconciliation for split conversations."""
     cfg = cfg or EngineConfig()
     path = pack_path or os.path.join(cfg.checkpoint_dir, algo_name, "graph")
-    _ensure_pack(edges, cfg, path, reuse_pack=reuse_pack)
+    reuse_or_pack(pack_cascade, edges, cfg, path, reuse_pack)
 
     local = (
-        _block_edges(spark, path)
+        unpack_csr(spark, path)
         .groupBy("part")
         .applyInPandas(_components_kernel, "vid long, component long")
     )
@@ -482,12 +441,12 @@ def cascade_labelprop(
     (vid, label)."""
     cfg = cfg or EngineConfig()
     path = pack_path or os.path.join(cfg.checkpoint_dir, algo_name, "graph")
-    _ensure_pack(edges, cfg, path, reuse_pack=reuse_pack)
+    reuse_or_pack(pack_cascade, edges, cfg, path, reuse_pack)
     placement = spark.read.parquet(placement_path(path))
 
     max_iter = fixed_iterations or cfg.max_iterations
     local = (
-        _block_edges(spark, path)
+        unpack_csr(spark, path)
         .groupBy("part")
         .applyInPandas(
             _labelprop_kernel_factory(max_iter), "vid long, label long"
@@ -536,11 +495,11 @@ def cascade_triangles(
     (split-residue hybrid — see module docstring)."""
     cfg = cfg or EngineConfig()
     path = pack_path or os.path.join(cfg.checkpoint_dir, algo_name, "graph")
-    _ensure_pack(edges, cfg, path, reuse_pack=reuse_pack)
+    reuse_or_pack(pack_cascade, edges, cfg, path, reuse_pack)
     placement = spark.read.parquet(placement_path(path))
 
     per_vertex = (
-        _block_edges(spark, path)
+        unpack_csr(spark, path)
         .groupBy("part")
         .applyInPandas(_triangles_kernel, "vid long, triangles long")
     )

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from crgp_spark.config import EngineConfig
-from crgp_spark.plans.checkpoint import CheckpointManager
+from crgp_spark.plans.checkpoint import CheckpointManager, vertex_partition
 from crgp_spark.plans.superstep import reset_stats, state_hint
 
 
@@ -75,14 +75,26 @@ def _small_star(e: DataFrame, n: int) -> DataFrame:
     return moved.unionByName(self_edges).distinct()
 
 
-def _checksum(e: DataFrame):
-    # bit_xor: order-insensitive, overflow-free (ANSI mode) set digest;
-    # valid because the edge set is deduplicated each round.
-    r = e.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.bit_xor(F.xxhash64(F.least("u", "v"), F.greatest("u", "v"))).alias("h"),
-    ).first()
-    return int(r["n"]), int(r["h"] or 0)
+def _checksum(e: DataFrame, partitions: int):
+    """``((edges, digest), [(partition_id, edges), ...])`` of a round's
+    edge set in one job: per-partition ``count`` + ``bit_xor``, summed and
+    XORed on the driver. bit_xor: order-insensitive, overflow-free (ANSI
+    mode) set digest; valid because the edge set is deduplicated each
+    round."""
+    rows = (
+        e.groupBy(vertex_partition("u", partitions).alias("p"))
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.bit_xor(F.xxhash64(F.least("u", "v"), F.greatest("u", "v"))).alias("h"),
+        )
+        .collect()
+    )
+    digest = 0
+    for r in rows:
+        digest ^= r["h"]
+    counts = {r["p"]: r["n"] for r in rows}
+    per_part = [(p, counts.get(p, 0)) for p in range(partitions)]
+    return (sum(counts.values()), digest), per_part
 
 
 def connected_components(
@@ -100,20 +112,19 @@ def connected_components(
     cfg = cfg or EngineConfig()
     cm = CheckpointManager(cfg.checkpoint_dir, algo_name, cfg.snapshot_every)
 
-    start_it = 0
-    e = None
-    if resume:
-        last = cm.latest()
-        if last is not None and not last.converged:
-            e = cm.load_state(spark, last).persist()
-            start_it = last.iteration + 1
-        elif last is not None:
-            e = cm.load_state(spark, last)
-    if e is None:
+    start_it, converged = 0, False
+    last = cm.latest() if resume else None
+    if last is not None:
+        # a converged checkpoint already holds the final star forest
+        e = cm.load_state(spark, last).persist()
+        start_it, converged = last.iteration + 1, last.converged
+    else:
         e = _canon(edges).repartition(cfg.shuffle_partitions, "u").persist()
 
-    prev_sum = _checksum(e)
-    for it in range(start_it, cfg.max_iterations):
+    P = cfg.graph_partitions
+    prev_sum = None if converged else _checksum(e, P)[0]
+    rounds = () if converged else range(start_it, cfg.max_iterations)
+    for it in rounds:
         # |V| <= 2*edges of the shrinking round edge set — a cheap upper
         # bound for the state-join hint, refreshed from the checksum
         n_bound = 2 * prev_sum[0]
@@ -129,30 +140,11 @@ def connected_components(
                 eager=True
             )
         )
-        cur_sum = _checksum(e2)
+        cur_sum, per_part = _checksum(e2, P)
         converged = cur_sum == prev_sum
 
         if it % cfg.checkpoint_every == 0 or converged:
-            lineage = (
-                e2.groupBy(
-                    F.pmod(F.xxhash64("u"), F.lit(cfg.graph_partitions))
-                    .cast("int")
-                    .alias("partition_id")
-                )
-                .agg(F.count(F.lit(1)).alias("edges_scanned"))
-                .select(
-                    F.lit(algo_name).alias("algo"),
-                    F.lit(it).alias("iteration"),
-                    "partition_id",
-                    "edges_scanned",
-                    F.col("edges_scanned").alias("messages_sent"),
-                    F.lit(cur_sum[0]).alias("frontier_size"),
-                    (
-                        F.col("edges_scanned")
-                        / F.lit(max(cur_sum[0] / cfg.graph_partitions, 1.0))
-                    ).alias("skew_ratio"),
-                )
-            )
+            lineage = [(p, c, c, cur_sum[0]) for p, c in per_part]
             cm.commit(
                 it,
                 e2,

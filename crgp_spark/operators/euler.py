@@ -466,9 +466,7 @@ def _substrate_listrank(
         "comp",
         F.col("parent").alias("t"),
         F.col("vid").alias("h"),
-        F.when(F.col("_fc").isNotNull(), F.col("vid"))
-        .otherwise(F.col("vid"))
-        .alias("nt"),
+        F.col("vid").alias("nt"),  # both successors leave from c
         F.coalesce(F.col("_fc"), F.col("parent")).alias("nh"),
     )
     up = ch.select(

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from crgp_spark.config import EngineConfig
+from crgp_spark.plans.checkpoint import partition_counts
 from crgp_spark.plans.superstep import (
     LoopResult,
     StepOutcome,
@@ -93,29 +94,12 @@ def label_propagation(
             )
             .localCheckpoint(eager=True)
         )
-        row = new_state.agg(
-            F.sum(F.col("_changed").cast("long")).alias("frontier"),
-            F.count(F.lit(1)).alias("n"),
-        ).first()
-        frontier = int(row["frontier"] or 0)
-        lineage = (
-            new_state.filter("_changed")
-            .groupBy(
-                F.pmod(F.xxhash64("vid"), F.lit(cfg.graph_partitions))
-                .cast("int")
-                .alias("partition_id")
-            )
-            .agg(F.count(F.lit(1)).alias("frontier_size"))
-            .select(
-                F.lit(algo_name).alias("algo"),
-                F.lit(it).alias("iteration"),
-                "partition_id",
-                F.lit(0).cast("long").alias("edges_scanned"),
-                F.col("frontier_size").alias("messages_sent"),
-                "frontier_size",
-                F.lit(1.0).alias("skew_ratio"),
-            )
+        # one job: per-partition changed counts; their sum is the frontier
+        changed = partition_counts(
+            new_state.filter("_changed"), "vid", cfg.graph_partitions
         )
+        frontier = sum(c for _, c in changed)
+        lineage = [(p, 0, c, c) for p, c in changed]
         if fixed_iterations is not None:
             converged = it >= fixed_iterations - 1
         else:

@@ -70,6 +70,7 @@ from pyspark.sql import functions as F
 
 from crgp_spark.config import EngineConfig
 from crgp_spark.functions import md5_num60
+from crgp_spark.plans.checkpoint import partition_counts
 from crgp_spark.plans.superstep import (
     LoopResult,
     StepOutcome,
@@ -288,28 +289,12 @@ def louvain_moves(
             )
             .localCheckpoint(eager=True)
         )
-        frow = new_state.agg(
-            F.sum(F.col("_changed").cast("long")).alias("frontier")
-        ).first()
-        frontier = int(frow["frontier"] or 0)
-        lineage = (
-            new_state.filter("_changed")
-            .groupBy(
-                F.pmod(F.xxhash64("vid"), F.lit(cfg.graph_partitions))
-                .cast("int")
-                .alias("partition_id")
-            )
-            .agg(F.count(F.lit(1)).alias("frontier_size"))
-            .select(
-                F.lit(algo_name).alias("algo"),
-                F.lit(it).alias("iteration"),
-                "partition_id",
-                F.lit(0).cast("long").alias("edges_scanned"),
-                F.col("frontier_size").alias("messages_sent"),
-                "frontier_size",
-                F.lit(1.0).alias("skew_ratio"),
-            )
+        # one job: per-partition changed counts; their sum is the frontier
+        changed = partition_counts(
+            new_state.filter("_changed"), "vid", cfg.graph_partitions
         )
+        frontier = sum(c for _, c in changed)
+        lineage = [(p, 0, c, c) for p, c in changed]
         converged = it >= rounds - 1
         metrics = {"frontier": frontier, "converged": converged}
         return StepOutcome(new_state, lineage, metrics)

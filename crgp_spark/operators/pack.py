@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import json
 import os
+from typing import Callable
 
 import numpy as np
 import pandas as pd
@@ -44,6 +45,41 @@ BLOCK_SCHEMA = (
 #: = v1) differs — reading a v1 pack through v2 paths silently loses
 #: replicas (ADVICE r2).
 PACK_FORMAT_VERSION = 2
+
+
+def pack_layout(cfg: EngineConfig) -> dict:
+    """What a pack's block contents depend on besides the edges: the
+    on-disk format and the partitioning knobs. Recorded in
+    ``_pack_stats.json`` by every packer."""
+    return {
+        "format_version": PACK_FORMAT_VERSION,
+        "graph_partitions": cfg.graph_partitions,
+        "hub_degree_threshold": cfg.hub_degree_threshold,
+        "max_salt": cfg.max_salt,
+    }
+
+
+def reuse_or_pack(
+    pack_fn: Callable[[DataFrame, EngineConfig, str], dict],
+    edges: DataFrame,
+    cfg: EngineConfig,
+    path: str,
+    reuse: bool,
+) -> dict:
+    """Statistics of the pack at ``path``. With ``reuse`` an existing
+    pack is kept only when its recorded ``pack_layout`` equals ``cfg``'s
+    — a pack from another layout (older format, other partition count or
+    salting) would feed the kernels blocks that disagree with this run's
+    placement and state. Anything else repacks with
+    ``pack_fn(edges, cfg, path)``; the edges themselves are the caller's
+    promise (``reuse`` means the pack was built from these edges)."""
+    stats_file = os.path.join(path, "_pack_stats.json")
+    if reuse and os.path.exists(stats_file):
+        with open(stats_file) as f:
+            stats = json.load(f)
+        if all(stats.get(k) == v for k, v in pack_layout(cfg).items()):
+            return stats
+    return pack_fn(edges, cfg, path)
 
 
 def salted(edges: DataFrame, cfg: EngineConfig) -> DataFrame:
@@ -126,14 +162,13 @@ def pack_csr(edges: DataFrame, cfg: EngineConfig, path: str) -> dict:
         # entries instead of silently serving the previous graph's blocks
         # (ADVICE r1).
         "pack_id": uuid.uuid4().hex,
-        "format_version": PACK_FORMAT_VERSION,
+        **pack_layout(cfg),
         "n_parts": int(r["n_parts"]),
         "n_edges": int(r["n_edges"]),
         "max_edges": int(r["max_edges"]),
         "mean_edges": float(r["mean_edges"]),
         "skew_ratio": float(r["max_edges"]) / max(float(r["mean_edges"]), 1.0),
         "n_src_slots": int(r["n_src_slots"]),
-        "graph_partitions": cfg.graph_partitions,
     }
     with open(os.path.join(path, "_pack_stats.json"), "w") as f:
         json.dump(stats, f)
@@ -166,7 +201,7 @@ _BLOCK_CACHE: dict = {}
 
 def _cache_put(key: tuple, blk) -> None:
     """Insert a block, evicting superseded entries for the same
-    (path, part[, kind]) prefix with a DIFFERENT pack_id (the key's last
+    (path, part) prefix with a DIFFERENT pack_id (the key's last
     element). Repack-by-default means every cascade-algo invocation
     mints a fresh pack_id; without eviction a long-lived app's reused
     Python workers accumulate one full copy of all CSR blocks per
@@ -179,7 +214,10 @@ def _cache_put(key: tuple, blk) -> None:
 
 
 def load_block(path: str, part: int, pack_id: str | None = None):
-    """Fetch one CSR block as numpy arrays (cached per worker process).
+    """Fetch one block's array columns as numpy arrays, keyed by column
+    name (cached per worker process). Serves both layouts: CSR blocks
+    (``src_ids``, ``src_deg``, ``indptr``, ``dst``) and cascade blocks
+    (those plus ``vids``, ``vdeg``).
 
     ``pack_id`` is the fingerprint from ``_pack_stats.json``; callers
     running iterative kernels MUST thread it through, otherwise a
@@ -187,29 +225,31 @@ def load_block(path: str, part: int, pack_id: str | None = None):
     key = (path, part, pack_id)
     blk = _BLOCK_CACHE.get(key)
     if blk is None:
+        import pyarrow as pa
         import pyarrow.dataset as ds
 
         tbl = ds.dataset(
             os.path.join(path, f"part={part}"), format="parquet"
         ).to_table()
         blk = {
-            "src_ids": tbl["src_ids"][0].values.to_numpy(zero_copy_only=False),
-            "src_deg": tbl["src_deg"][0].values.to_numpy(zero_copy_only=False),
-            "indptr": tbl["indptr"][0].values.to_numpy(zero_copy_only=False),
-            "dst": tbl["dst"][0].values.to_numpy(zero_copy_only=False),
+            name: col[0].values.to_numpy(zero_copy_only=False)
+            for name, col in zip(tbl.column_names, tbl.columns)
+            if pa.types.is_list(col.type)
         }
         _cache_put(key, blk)
     return blk
 
 
 def unpack_csr(spark: SparkSession, path: str) -> DataFrame:
-    """Round-trip: packed blocks back to an (src, dst) edge DataFrame
-    (salted hub replicas merge back losslessly)."""
+    """Packed blocks (either layout) back to ``(part, src, dst)`` edge
+    rows, one per resident edge; salted hub replicas merge back
+    losslessly once ``part`` is dropped."""
     blocks = spark.read.parquet(path)
-    exploded = blocks.select(
+    return blocks.select(
+        "part",
         F.explode(
             F.transform(
-                F.sequence(F.lit(0), F.col("n_src") - 1),
+                F.sequence(F.lit(0), F.size("src_ids") - 1),
                 lambda i: F.struct(
                     F.col("src_ids")[i].alias("src"),
                     F.slice(
@@ -219,6 +259,5 @@ def unpack_csr(spark: SparkSession, path: str) -> DataFrame:
                     ).alias("adj"),
                 ),
             )
-        ).alias("z")
-    ).select(F.col("z.src").alias("src"), F.explode("z.adj").alias("dst"))
-    return exploded
+        ).alias("z"),
+    ).select("part", F.col("z.src").alias("src"), F.explode("z.adj").alias("dst"))

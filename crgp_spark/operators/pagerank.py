@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from crgp_spark.config import EngineConfig
-from crgp_spark.operators.pack import load_block, pack_csr, placement
+from crgp_spark.operators.pack import load_block, pack_csr, placement, reuse_or_pack
 from crgp_spark.plans.superstep import (
     BROADCAST_STATE_MAX_VERTICES,  # noqa: F401  (re-export; policy + docs live in superstep.py)
     LoopResult,
@@ -113,27 +113,23 @@ def pagerank(
     ``reuse_pack`` reuses existing CSR blocks at the pack path (e.g.
     packed ahead of time by a bench harness that times the pack phase
     separately, mirroring the reference's graph-load vs
-    retweet-process phase split, ``statistics.rs:24-37``).
+    retweet-process phase split, ``statistics.rs:24-37``); so does
+    ``resume``. Either way a pack built with another layout is rebuilt
+    (``pack.reuse_or_pack``) — the ``(vid, rank)`` state is
+    layout-independent, so a resume across a partition change is exact.
 
     Returns state ``(vid, rank)``; ranks sum to 1.
     """
     cfg = cfg or EngineConfig()
     pack_path = os.path.join(cfg.checkpoint_dir, algo_name, "graph")
-
-    stats_file = os.path.join(pack_path, "_pack_stats.json")
-    if not ((resume or reuse_pack) and os.path.exists(stats_file)):
-        pack_stats = pack_csr(edges.select("src", "dst"), cfg, pack_path)
-    else:
-        import json
-
-        with open(stats_file) as f:
-            pack_stats = json.load(f)
+    pack_stats = reuse_or_pack(
+        pack_csr, edges.select("src", "dst"), cfg, pack_path, resume or reuse_pack
+    )
 
     blocks_meta = {
         int(r["part"]): int(r["n_edges"])
         for r in spark.read.parquet(pack_path).select("part", "n_edges").collect()
     }
-    mean_edges = max(pack_stats["mean_edges"], 1.0)
 
     verts = vertex_universe(edges, cfg).persist()
     n = verts.count()
@@ -207,22 +203,10 @@ def pagerank(
 
         max_delta = float(agg["max_delta"] or 0.0)
         frontier = int(agg["frontier"] or 0)
-        lineage = spark.createDataFrame(
-            [
-                (
-                    algo_name,
-                    it,
-                    int(r["part"]),
-                    blocks_meta.get(int(r["part"]), 0),
-                    int(r["messages_sent"]),
-                    frontier,
-                    blocks_meta.get(int(r["part"]), 0) / mean_edges,
-                )
-                for r in part_rows
-            ],
-            schema="algo string, iteration int, partition_id int, edges_scanned long, "
-            "messages_sent long, frontier_size long, skew_ratio double",
-        )
+        lineage = [
+            (r["part"], blocks_meta.get(r["part"], 0), r["messages_sent"], frontier)
+            for r in part_rows
+        ]
         metrics = {
             "max_delta": max_delta,
             "frontier": frontier,

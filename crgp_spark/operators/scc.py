@@ -49,7 +49,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from crgp_spark.config import EngineConfig
-from crgp_spark.plans.checkpoint import CheckpointManager
+from crgp_spark.plans.checkpoint import CheckpointManager, partition_counts
 from crgp_spark.plans.superstep import (
     _release_stale_checkpoints,
     reset_stats,
@@ -335,22 +335,8 @@ def strongly_connected_components(
             )
             .localCheckpoint(eager=True)
         )
-        lineage = done.groupBy(
-            F.pmod(F.xxhash64("vid"), F.lit(cfg.graph_partitions))
-            .cast("int")
-            .alias("partition_id")
-        ).agg(F.count(F.lit(1)).alias("edges_scanned")).select(
-            F.lit(algo_name).alias("algo"),
-            F.lit(rnd).alias("iteration"),
-            "partition_id",
-            "edges_scanned",
-            F.col("edges_scanned").alias("messages_sent"),
-            F.lit(n_next).alias("frontier_size"),
-            (
-                F.col("edges_scanned")
-                / F.lit(max(n_next / cfg.graph_partitions, 1.0))
-            ).alias("skew_ratio"),
-        )
+        resolved = partition_counts(done, "vid", cfg.graph_partitions)
+        lineage = [(p, c, c, n_next) for p, c in resolved]
         cm.commit(
             rnd,
             done,

@@ -5,8 +5,17 @@ Layout, per algorithm run::
 
     {root}/{algo}/iter_00007/
         state/      parquet — full snapshot OR delta (changed rows only)
-        lineage/    parquet — one row per graph partition (schemas.LINEAGE)
-        manifest.json   written LAST via tmp+rename → commit point
+        manifest.json   written LAST via tmp+rename → commit point;
+                        ``"lineage"`` holds the superstep's rows, one per
+                        graph partition, in ``schemas.LINEAGE`` field order
+
+Lineage is a few dozen driver-side numbers per superstep, so it rides in
+the manifest (the reference's one driver-side statistics record,
+``statistics.rs:17-53``) instead of costing a parquet write job per
+commit; ``CheckpointManager.lineage`` turns the committed rows into a
+``schemas.LINEAGE`` frame. Directories written before lineage moved into
+the manifest (a ``lineage/`` parquet dir, no manifest key) still resume;
+their iterations contribute no lineage rows.
 
 A checkpoint exists iff its manifest exists (the ``_SUCCESS``-guarded
 analog of an Iceberg snapshot commit; parquet fallback per SURVEY.md R4 —
@@ -26,12 +35,45 @@ import json
 import os
 import re
 import shutil
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from crgp_spark.schemas import LINEAGE
+
 _ITER_RE = re.compile(r"^iter_(\d{5})$")
+
+#: One superstep's lineage for one graph partition, as operators hand it
+#: to ``commit``: ``(partition_id, edges_scanned, messages_sent,
+#: frontier_size)``. ``frontier_size`` is the operator's own frontier
+#: measure (global or per-partition, see each operator).
+LineageRow = tuple[int, int, int, int]
+
+
+def vertex_partition(col: str, partitions: int) -> Column:
+    """Lineage partition of a vertex-keyed row: ``pmod(xxhash64(col),
+    partitions)``."""
+    return F.pmod(F.xxhash64(col), F.lit(partitions)).cast("int")
+
+
+def partition_counts(df: DataFrame, col: str, partitions: int) -> list[tuple[int, int]]:
+    """``(partition_id, rows)`` of ``df`` per ``vertex_partition(col)``,
+    every partition listed (zeros included), from one job."""
+    got = dict(df.groupBy(vertex_partition(col, partitions)).count().collect())
+    return [(p, got.get(p, 0)) for p in range(partitions)]
+
+
+def _lineage_rows(algo: str, iteration: int, rows: list[LineageRow]) -> list[list]:
+    """Full ``schemas.LINEAGE`` rows for one commit. ``skew_ratio`` =
+    ``edges_scanned`` / the mean ``edges_scanned`` of the commit's rows,
+    1.0 when that mean is 0."""
+    rows = [tuple(int(x) for x in r) for r in rows]
+    mean = sum(r[1] for r in rows) / len(rows) if rows else 0.0
+    return [
+        [algo, iteration, p, e, m, f, e / mean if mean else 1.0]
+        for p, e, m, f in rows
+    ]
 
 
 @dataclass
@@ -41,10 +83,12 @@ class Checkpoint:
     converged: bool
     metrics: dict
     path: str
+    lineage: list = field(default_factory=list)  # schemas.LINEAGE rows
 
 
 class CheckpointManager:
     def __init__(self, root: str, algo: str, snapshot_every: int = 5):
+        self.algo = algo
         self.dir = os.path.join(root, algo)
         self.snapshot_every = snapshot_every
         os.makedirs(self.dir, exist_ok=True)
@@ -54,28 +98,30 @@ class CheckpointManager:
         self,
         iteration: int,
         state: DataFrame,
-        lineage: DataFrame | None,
+        lineage: list[LineageRow] | None,
         kind: str,
         converged: bool,
         metrics: dict,
     ) -> Checkpoint:
+        """Write ``state`` and commit it with the superstep's per-partition
+        ``lineage`` rows in one manifest (the only write job is the state's)."""
         it_dir = os.path.join(self.dir, f"iter_{iteration:05d}")
         if os.path.exists(it_dir):
             shutil.rmtree(it_dir)  # torn previous attempt — no manifest, dead
         state.write.mode("overwrite").parquet(os.path.join(it_dir, "state"))
-        if lineage is not None:
-            lineage.write.mode("overwrite").parquet(os.path.join(it_dir, "lineage"))
+        rows = _lineage_rows(self.algo, iteration, lineage or [])
         manifest = {
             "iteration": iteration,
             "kind": kind,
             "converged": converged,
             "metrics": metrics,
+            "lineage": rows,
         }
         tmp = os.path.join(it_dir, "manifest.json.tmp")
         with open(tmp, "w") as f:
             json.dump(manifest, f)
         os.replace(tmp, os.path.join(it_dir, "manifest.json"))
-        return Checkpoint(iteration, kind, converged, metrics, it_dir)
+        return Checkpoint(iteration, kind, converged, metrics, it_dir, rows)
 
     # -- read -------------------------------------------------------------
     def checkpoints(self) -> list[Checkpoint]:
@@ -98,6 +144,7 @@ class CheckpointManager:
                     meta["converged"],
                     meta.get("metrics", {}),
                     os.path.join(self.dir, name),
+                    meta.get("lineage", []),
                 )
             )
         return out
@@ -136,11 +183,9 @@ class CheckpointManager:
         return picked.select("vid", *[F.col(f"_v.{c}").alias(c) for c in value_cols])
 
     def lineage(self, spark: SparkSession) -> DataFrame | None:
-        paths = [
-            os.path.join(c.path, "lineage")
-            for c in self.checkpoints()
-            if os.path.isdir(os.path.join(c.path, "lineage"))
-        ]
-        if not paths:
+        """Every committed lineage row as a ``schemas.LINEAGE`` frame
+        (None when there is none)."""
+        rows = [tuple(r) for c in self.checkpoints() for r in c.lineage]
+        if not rows:
             return None
-        return spark.read.parquet(*paths)
+        return spark.createDataFrame(rows, schema=LINEAGE)

@@ -15,8 +15,9 @@ Algorithms plug in two functions:
 
 ``step_fn(state, iteration) -> StepOutcome``
     one superstep. Returns the FULL new state with an extra ``_changed``
-    boolean column (the frontier), optional lineage rows, and metrics —
-    must contain ``converged: bool``. The returned state MUST be
+    boolean column (the frontier), the superstep's per-partition lineage
+    as driver-side ``checkpoint.LineageRow`` tuples (committed into the
+    checkpoint manifest), and metrics — must contain ``converged: bool``. The returned state MUST be
     materialized with a TRUNCATED plan (``localCheckpoint(eager=True)``
     or a parquet round-trip): without truncation the lineage tree deepens
     every superstep and Catalyst overflows the JVM stack after a few
@@ -32,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from crgp_spark.config import EngineConfig
-from crgp_spark.plans.checkpoint import CheckpointManager
+from crgp_spark.plans.checkpoint import CheckpointManager, LineageRow
 
 
 #: Below this vertex count a per-iteration state table is a genuinely
@@ -95,7 +96,7 @@ def reset_stats(df: DataFrame) -> DataFrame:
 @dataclass
 class StepOutcome:
     state: DataFrame  # vid + value cols + `_changed` bool
-    lineage: DataFrame | None
+    lineage: list[LineageRow]  # one row per graph partition
     metrics: dict
 
 

@@ -81,6 +81,30 @@ def test_cascade_resume(spark, conv_edges, tmp_path):
     assert all(abs(a[v] - b[v]) < 1e-12 for v in a)
 
 
+def test_cascade_resume_after_partition_change(spark, conv_edges, tmp_path):
+    """A resume under another ``graph_partitions`` repacks, and the
+    checkpointed state — keyed by the old pack's ``part`` — is re-homed
+    onto the new blocks."""
+    res1 = pagerank_cascade(
+        spark, conv_edges, _cfg(tmp_path, max_iterations=3), algo_name="pr_rp"
+    )
+    assert not res1.converged
+    cfg4 = EngineConfig(
+        shuffle_partitions=8, graph_partitions=4,
+        checkpoint_dir=str(tmp_path), checkpoint_every=2,
+    )
+    res2 = pagerank_cascade(spark, conv_edges, cfg4, algo_name="pr_rp", resume=True)
+    assert res2.converged and res2.resumed_from == 2
+
+    straight = pagerank_cascade(
+        spark, conv_edges, _cfg(tmp_path / "s"), algo_name="pr_straight"
+    )
+    a = {r["vid"]: r["rank"] for r in res2.state.collect()}
+    b = {r["vid"]: r["rank"] for r in straight.state.collect()}
+    assert set(a) == set(b)
+    assert all(abs(a[v] - b[v]) < 1e-12 for v in a)
+
+
 def test_cascade_lineage_written(spark, conv_edges, tmp_path):
     from crgp_spark.plans.checkpoint import CheckpointManager
 
@@ -102,7 +126,7 @@ def test_old_format_pack_is_repacked_on_reuse(spark, conv_edges, tmp_path):
 
     from crgp_spark.config import EngineConfig
     from crgp_spark.operators.cascade import pagerank_cascade
-    from crgp_spark.operators.cascade_algos import _ensure_pack
+    from crgp_spark.operators.pack import reuse_or_pack
 
     cfg = EngineConfig(
         shuffle_partitions=4,
@@ -134,11 +158,11 @@ def test_old_format_pack_is_repacked_on_reuse(spark, conv_edges, tmp_path):
     assert new_stats.get("format_version", 0) >= 2
     assert new_stats["pack_id"] != old_pack_id
 
-    # same discipline in the cascade-algos ensure-pack helper
+    # same discipline in the reuse rule the cascade algorithms call
     del new_stats["format_version"]
     with open(stats_file, "w") as f:
         json.dump(new_stats, f)
-    refreshed = _ensure_pack(conv_edges, cfg, pack_path, reuse_pack=True)
+    refreshed = reuse_or_pack(pack_cascade, conv_edges, cfg, pack_path, reuse=True)
     assert refreshed.get("format_version", 0) >= 2
 
     # results unaffected

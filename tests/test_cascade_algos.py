@@ -99,7 +99,7 @@ def test_triangles_match(spark, conv_edges, tmp_path):
 def test_repack_same_path_different_graph_not_stale(spark, tmp_path):
     """Two different edge tables through the same cfg/path must not
     reuse the first graph's pack or worker-cached CSR blocks (ADVICE r1:
-    _ensure_pack reused any existing pack; _BLOCK_CACHE lacked a pack
+    the cascade pack helper reused any existing pack; _BLOCK_CACHE lacked a pack
     fingerprint)."""
     t1 = synthetic_transcripts(spark, n_convs=12, seed=1, max_turns=16)
     t2 = synthetic_transcripts(spark, n_convs=20, seed=2, max_turns=24)

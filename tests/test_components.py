@@ -68,3 +68,22 @@ def test_resume(spark, tmp_path):
         ).collect()
     }
     assert resumed == full
+
+    # resuming the now-converged run returns its labels without running
+    # or committing another round
+    def manifests():
+        out = {}
+        for name in sorted(os.listdir(d)):
+            with open(os.path.join(d, name, "manifest.json")) as f:
+                out[name] = f.read()
+        return out
+
+    before = manifests()
+    again = {
+        r.vid: r.component
+        for r in connected_components(
+            spark, edges, cfg, resume=True, algo_name="cc_r"
+        ).collect()
+    }
+    assert manifests() == before
+    assert again == full

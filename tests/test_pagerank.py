@@ -95,6 +95,68 @@ def test_resume_equivalence(spark, graph, tmp_path):
     assert partial.converged
 
 
+def test_resume_after_partition_change(spark, graph, tmp_path):
+    """A resume under another ``graph_partitions`` must repack: the stored
+    pack's blocks disagree with the new run's placement, and reusing them
+    converges to wrong ranks with mass 1."""
+    edges, pdf = graph
+    stopped = pagerank(
+        spark, edges, _cfg(tmp_path, graph_partitions=8, max_iterations=3),
+        algo_name="pr_repart",
+    )
+    assert not stopped.converged
+    res = pagerank(spark, edges, _cfg(tmp_path), resume=True, algo_name="pr_repart")
+    assert res.resumed_from == 2 and res.converged
+    got = {r.vid: r.rank for r in res.state.collect()}
+    want = pagerank_oracle(pdf)
+    assert set(got) == set(want)
+    assert max(abs(got[v] - want[v]) for v in want) < 1e-6
+    assert abs(sum(got.values()) - 1.0) < 1e-9
+
+
+def test_resume_from_lineage_parquet_layout(spark, graph, tmp_path):
+    """A checkpoint dir in the earlier layout (lineage as a ``lineage/``
+    parquet dir per commit, no ``"lineage"`` manifest key, pack stats
+    without the salting knobs) resumes to the straight-through ranks."""
+    import json
+
+    from crgp_spark.plans.checkpoint import CheckpointManager
+    from crgp_spark.schemas import LINEAGE
+
+    edges, _ = graph
+    full = pagerank(spark, edges, _cfg(tmp_path / "straight"), algo_name="pr_full")
+
+    cfg = _cfg(tmp_path / "old", max_iterations=3)
+    pagerank(spark, edges, cfg, algo_name="pr_old")
+    cm = CheckpointManager(cfg.checkpoint_dir, "pr_old")
+    for ck in cm.checkpoints():
+        mf = os.path.join(ck.path, "manifest.json")
+        with open(mf) as f:
+            meta = json.load(f)
+        rows = [tuple(r) for r in meta.pop("lineage")]
+        spark.createDataFrame(rows, LINEAGE).write.parquet(os.path.join(ck.path, "lineage"))
+        with open(mf, "w") as f:
+            json.dump(meta, f)
+    stats_file = os.path.join(cfg.checkpoint_dir, "pr_old", "graph", "_pack_stats.json")
+    with open(stats_file) as f:
+        stats = json.load(f)
+    del stats["hub_degree_threshold"], stats["max_salt"]
+    with open(stats_file, "w") as f:
+        json.dump(stats, f)
+    assert cm.lineage(spark) is None
+
+    resumed = pagerank(spark, edges, _cfg(tmp_path / "old"), resume=True, algo_name="pr_old")
+    assert resumed.resumed_from == 2 and resumed.converged
+    a = {r.vid: r.rank for r in full.state.collect()}
+    b = {r.vid: r.rank for r in resumed.state.collect()}
+    assert set(a) == set(b)
+    assert all(abs(a[v] - b[v]) < 1e-9 for v in a)
+    # only the commits made after the resume carry manifest lineage
+    assert {r.iteration for r in cm.lineage(spark).collect()} == set(
+        range(3, resumed.iterations)
+    )
+
+
 def test_parallelism_invariance(spark, graph, tmp_path):
     """Same input, different partition counts -> allclose(1e-6)
     (SURVEY.md R2; evidences scaling-correctness at two widths)."""

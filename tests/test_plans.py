@@ -63,6 +63,28 @@ def test_influence_rule_written_once():
     assert not offenders, "\n".join(offenders)
 
 
+def test_lineage_row_built_once():
+    """Lineage rows are built in ``plans/checkpoint.py`` alone: operators
+    hand over ``(partition_id, edges_scanned, messages_sent,
+    frontier_size)`` tuples and never re-type the ``schemas.LINEAGE`` row
+    (its ``frontier_size`` column) themselves."""
+    allowed = {
+        os.path.join(ENGINE_ROOT, "plans", "checkpoint.py"),
+        os.path.join(ENGINE_ROOT, "schemas.py"),
+    }
+    offenders = []
+    for root, _dirs, files in os.walk(ENGINE_ROOT):
+        for fn in files:
+            path = os.path.join(root, fn)
+            if not fn.endswith(".py") or path in allowed:
+                continue
+            with open(path) as f:
+                for i, line in enumerate(f, 1):
+                    if "frontier_size" in line:
+                        offenders.append(f"{path}:{i}: {line.strip()}")
+    assert not offenders, "\n".join(offenders)
+
+
 def test_filter_pushdown_and_column_pruning(spark, tmp_path):
     """A conv_id filter over the parquet transcripts must reach the scan
     (PushedFilters) and unused wide columns (text) must be pruned from
